@@ -54,11 +54,12 @@ object Bench {
                                  cpus: String, matched: Option[Int],
                                  nFlags: Int, nFailed: Int): String = {
     val cpusJson = cpus.trim.toIntOption.map(_.toString)
-      .getOrElse("\"" + cpus + "\"")
+      .getOrElse(Json.str(cpus))
     val matchedJson = matched.map(m => s""","baseline_matched":$m""")
       .getOrElse("")
     s"""{"metric":"total","value":$totalStr,"unit":"sec","n":$n""" +
-      s""","sf":"$sfDir","cpus":$cpusJson$matchedJson,"n_flags":$nFlags""" +
+      s""","sf":${Json.str(sfDir)},"cpus":$cpusJson$matchedJson""" +
+      s""","n_flags":$nFlags""" +
       s""","n_failed":$nFailed,"detail":"bench_metrics.json"}"""
   }
 
@@ -228,7 +229,8 @@ object Bench {
     val totalStr = String.format(java.util.Locale.ROOT, "%.4f",
       Double.box(total))
     val line =
-      s"""{"metric":"total","value":$totalStr,"unit":"sec","queries":$qs,"sf":"$sfDir"$regressions$failures}"""
+      s"""{"metric":"total","value":$totalStr,"unit":"sec","queries":$qs""" +
+        s""","sf":${Json.str(sfDir)}$regressions$failures}"""
     println(line)
     // capture-proof twin: the driver reads stdout through a bounded tail
     // window (~2 KB — BENCH_r07's capture already clips the line head at

@@ -202,7 +202,13 @@ object Similarity {
     * corpus, all joins hash-partitioned on the cell id. Each k-means round
     * costs one n·K assignment plus an n·dim exploded mean — an offline
     * index-build cost that buys tighter cells (smaller nProbe at the same
-    * recall) on clustered corpora. */
+    * recall) on clustered corpora.
+    *
+    * `queryPred` must select a BOUNDED query set (a constant-size id
+    * window, not a corpus fraction): the probe set, queries × nProbe rows
+    * carrying the query vectors, is broadcast to the rerank join, so a
+    * corpus-proportional query side grows that broadcast with the corpus.
+    * The same holds for [[ivfSearchStored]]. */
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String,
               nCentroids: Int, nProbe: Int, queryPred: Column,
               k: Int, kmeansIters: Int = 0,
@@ -358,7 +364,7 @@ object Similarity {
     * surface as a search candidate, the GDPR-shaped contract. */
   def ivfDeleteStored(ids: DataFrame,
                       index: graft.sources.VectorIndex): DataFrame = {
-    index.deletePostings(ids)
+    index.delete(ids)
     ivfCensus(index)
   }
 
@@ -543,7 +549,7 @@ object Similarity {
                       index: graft.sources.VectorIndex): DataFrame = {
     val assigned = assignVectors(newEmb, idCol, vecCol,
       index.readCentroids())
-    index.upsertPostings(
+    index.upsert(
       assigned.select(col("cid"), col("id"), col("v"), col("nrm")))
     ivfCensus(index)
   }
@@ -556,7 +562,7 @@ object Similarity {
     * append's retry idempotent). The common-crawl ingest case at 100 TB:
     * new documents vastly outnumber re-ingests, and this path makes
     * them cost O(batch) instead of O(touched bands). Periodic
-    * [[graft.sources.VectorIndex.compactPostings]] folds the
+    * [[graft.sources.IndexStore.compact]] folds the
     * accumulated files back; a changed vector under an existing id must
     * use [[ivfExtendStored]]. Returns the per-cell census read back
     * from disk. */
@@ -573,7 +579,7 @@ object Similarity {
     if (expectToken.forall(index.isCurrent)) {
       val assigned = assignVectors(newEmb, idCol, vecCol,
         index.readCentroids())
-      index.appendPostings(
+      index.append(
         assigned.select(col("cid"), col("id"), col("v"), col("nrm")))
     }
     ivfCensus(index)
@@ -1063,7 +1069,11 @@ object Similarity {
     * join broadcasts the bounded probe set. Fixed nCells keeps routing
     * O(N·K·d) — production at corpus-scaled K would add
     * [[semanticDedup]]'s √K hierarchical routing; the join shape
-    * downstream is identical. */
+    * downstream is identical.
+    *
+    * `queryPred` must select a BOUNDED query set, as for [[ivfTopK]]: the
+    * probe set (queries × nProbe rows) is broadcast to the probed-member
+    * join. The same holds for [[ivfPqSearchStored]]. */
   def ivfPqTopK(emb: DataFrame, idCol: String, vecCol: String,
                 nCells: Int, nProbe: Int, m: Int, kCodes: Int, scale: Long,
                 queryPred: Column, rerank: Int, k: Int): DataFrame = {
@@ -1153,8 +1163,11 @@ object Similarity {
         .groupBy(col(idC))
         .agg(min(col("pd")).as("pd"))
         .select(col(idC), (col("pd") % lit(mExclusive)).cast("long").as(outC))
-    val subC = subspaces(mdSeeds("pq:", kCodes, "ccid"), "cv", "csub", m, sd)
-      .localCheckpoint()
+    // guarded like the scalar job: a failed codebook build must not leave
+    // the cell-seed job running detached with its error unobserved
+    val subC = graft.sources.Overlap.guarding(cellsT)(
+      subspaces(mdSeeds("pq:", kCodes, "ccid"), "cv", "csub", m, sd)
+        .localCheckpoint())
     val cells = cellsT()
     val assigned = argminTo(q.crossJoin(broadcast(cells)), "id",
       call_function("long_sq_dist", col("qv"), col("cv")), "cid", "cid")
@@ -1328,7 +1341,7 @@ object Similarity {
   def ivfPqExtendStored(newEmb: DataFrame, idCol: String, vecCol: String,
                         m: Int, scale: Long,
                         index: graft.sources.PqIndex): DataFrame = {
-    index.upsertCodes(encodeAgainstStored(newEmb, idCol, vecCol, m, scale,
+    index.upsert(encodeAgainstStored(newEmb, idCol, vecCol, m, scale,
       index))
     pqCensus(index)
   }
@@ -1405,7 +1418,7 @@ object Similarity {
     // [[ivfAppendStored]]'s append-once contract: apply only while the
     // index still covers the caller's pre-batch corpus version
     if (expectToken.forall(index.isCurrent))
-      index.appendCodes(encodeAgainstStored(newEmb, idCol, vecCol, m,
+      index.append(encodeAgainstStored(newEmb, idCol, vecCol, m,
         scale, index))
     pqCensus(index)
   }
@@ -1419,7 +1432,7 @@ object Similarity {
     * per-cell code census read back from disk. */
   def ivfPqDeleteStored(ids: DataFrame,
                         index: graft.sources.PqIndex): DataFrame = {
-    index.deleteCodes(ids)
+    index.delete(ids)
     pqCensus(index)
   }
 

@@ -311,14 +311,14 @@ object TfIdf {
     * cache slots for the same corpus. */
   private def textKey(idCol: String, textCol: String, idfScale: Long,
                       index: graft.sources.TextIndex): String =
-    s"text3|$idCol|$textCol|idf=$idfScale|buckets=${index.nBuckets}"
+    s"text3|$idCol|$textCol|idf=$idfScale|buckets=${index.nBands}"
 
   private def textMeta(docs: DataFrame, idCol: String, textCol: String,
                        idfScale: Long,
                        index: graft.sources.TextIndex): String =
     graft.sources.CorpusToken.cachedToken(docs,
       textKey(idCol, textCol, idfScale, index))(
-      textScanToken(docs, idCol, textCol, idfScale, index.nBuckets))
+      textScanToken(docs, idCol, textCol, idfScale, index.nBands))
 
   /** OFFLINE inverted-index build: run the tokenize → tf → df → integer
     * weight pipeline once and persist the weighted posting lists + per-doc
@@ -376,7 +376,7 @@ object TfIdf {
       textKey(idCol, textCol, idfScale, index))(
       graft.sources.CorpusToken.render("text3",
         graft.sources.CorpusToken.terms(perDoc, col("id"), col("fp")),
-        s"idf=$idfScale|buckets=${index.nBuckets}"))
+        s"idf=$idfScale|buckets=${index.nBands}"))
     index.writeIndex(w, ledger, meta)
     sparseCensus(index)
   }
@@ -492,7 +492,7 @@ object TfIdf {
     * full index rewrite by construction, while the append writes
     * exactly the batch's rows. Re-posted ids must use
     * [[sparseExtendStored]]; periodic
-    * [[graft.sources.TextIndex.compact]] folds the files back. Returns
+    * [[graft.sources.IndexStore.compact]] folds the files back. Returns
     * the per-df census read back from disk. */
   def sparseAppendStored(newDocs: DataFrame, idCol: String, textCol: String,
                          index: graft.sources.TextIndex,
@@ -514,7 +514,7 @@ object TfIdf {
         coalesce(col("df"), lit(1L)).as("df"), col("tf"),
         (col("tf") * expr(s"$idfScale div coalesce(df, 1)")).as("w"))
       .localCheckpoint(true)
-    index.appendDocs(w, ledgerOf(perDoc, w))
+    index.append(w, ledgerOf(perDoc, w))
     sparseCensus(index)
   }
 
@@ -568,7 +568,7 @@ object TfIdf {
     // reads only the checkpointed ledger frame `n`.
     def meta = graft.sources.CorpusToken.render("text3",
       graft.sources.CorpusToken.terms(n, col("id"), col("fp")),
-      s"idf=$idfScale|buckets=${index.nBuckets}")
+      s"idf=$idfScale|buckets=${index.nBands}")
     index.writeIndex(w, ledger, meta)
     sparseCensus(index)
   }

@@ -307,7 +307,7 @@ object Analytics {
   def q164IvfCompactStored(s: SparkSession, dir: String): DataFrame = {
     q161IvfAppendStored(s, dir).collect()
     val idx = vindex(s, dir, "appendable")
-    idx.compactPostings()
+    idx.compact()
     idx.readPostings()
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n_members"), sum(col("id")).as("sum_ids"))

@@ -345,7 +345,7 @@ object Curation {
   def q166IvfPqCompactStored(s: SparkSession, dir: String): DataFrame = {
     q163IvfPqAppendStored(s, dir).collect()
     val idx = pqIndex(s, dir, "pqa")
-    idx.compactCodes()
+    idx.compact()
     idx.readCodes()
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n_rows"), sum(col("id")).as("sum_ids"),

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
+import IndexStore.{Band, Table}
+
 /** Shared parquet-directory machinery for prebuilt ANN index stores — the
   * offline half of the production architecture (build once, search many).
   * Tables swap in atomically ([[TableStore]]'s write-temp + two-rename
@@ -20,30 +22,46 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * (invisible to Spark's file listing), then swaps each partition with
   * the same two-rename discipline; a crash mid-swap leaves `.old-*`
   * markers that [[recoverPartitions]] restores, and every maintenance op
-  * is keyed + idempotent, so a retry after a partial swap converges. */
+  * is keyed + idempotent, so a retry after a partial swap converges.
+  *
+  * A store is DATA: its [[Table]] descriptors ([[tables]]) and its token
+  * [[ledger]]. The maintenance lifecycle — [[writeIndex]], [[upsert]],
+  * [[append]], [[compact]], [[delete]] — is written once here and runs
+  * over those descriptors; the stores ([[VectorIndex]], [[TextIndex]],
+  * [[PqIndex]]) keep only schemas, descriptors, read accessors and typed
+  * entry points mapping their input frames onto their tables. */
 private[sources] abstract class IndexStore(spark: SparkSession,
-                                           root: String) {
+                                           root: String,
+                                           val nBands: Int) {
 
-  protected def path(table: String) = s"$root/$table"
-  protected def fs = new Path(root)
+  /** This store's tables, in the order their build writes start (the
+    * first runs on the calling thread); the banded ones take
+    * maintenance. */
+  protected def tables: Seq[Table]
+
+  /** The table and row filter whose `fp` column feeds the covered-corpus
+    * token: one row per covered corpus item. Its batch rows' ids are also
+    * the eviction keys of a keyed [[upsert]]. */
+  protected def ledger: (Table, Column)
+
+  private def banded = tables.filter(_.band.isDefined)
+
+  private def path(table: String) = s"$root/$table"
+  private def fs = new Path(root)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Partition count NEW layouts of this store are written with. */
-  protected def configuredBands: Int
-
-  /** The band/bucket count an EXISTING partitioned table was built with,
-    * read from its `_layout` marker ([[swapIn]] writes the marker into
-    * the temp dir, so it rides the same atomic rename as the data).
+  /** The band count an EXISTING partitioned table was built with, read
+    * from its `_layout` marker ([[swapIn]] writes the marker into the
+    * temp dir, so it rides the same atomic rename as the data).
     * Maintenance ops derive their partition arithmetic from THIS value,
-    * never the compile-time constant: raising the constant for a bigger
+    * never the constructor's [[nBands]]: raising the count for a bigger
     * deployment must not silently fragment an index built at the old
-    * count — new BUILDS pick up the new constant; existing layouts keep
-    * their own until rebuilt. Pre-marker indexes fall back to the
-    * configured constant (their fingerprints rebuild-gate them anyway
-    * on the next ensure). */
-  protected def liveBands(table: String): Int = {
-    val m = new Path(s"${path(table)}/_layout")
-    if (!fs.exists(m)) configuredBands
+    * count — new BUILDS pick up the new count; existing layouts keep
+    * their own until rebuilt. Pre-marker indexes fall back to [[nBands]]
+    * (their fingerprints rebuild-gate them anyway on the next ensure). */
+  private def liveBands(t: Table): Int = {
+    val m = new Path(s"${path(t.name)}/_layout")
+    if (!fs.exists(m)) nBands
     else {
       val in = fs.open(m)
       val s = try new String(in.readAllBytes(),
@@ -58,7 +76,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     * a kill between the two renames leaves the table absent with the
     * complete pre-swap copy in `.old-*` — restore it; leftover tmp/old
     * dirs from post-swap crashes are garbage — swept. */
-  protected def recoverSwap(table: String): Unit = {
+  private def recoverSwap(table: String): Unit = {
     val glob = fs.globStatus(new Path(path(table) + ".{old,tmp}-*"))
     if (glob == null || glob.isEmpty) return
     if (!fs.exists(new Path(path(table)))) {
@@ -71,102 +89,113 @@ private[sources] abstract class IndexStore(spark: SparkSession,
       .foreach(st => fs.delete(st.getPath, true))
   }
 
-  protected def swapIn(table: String, df: DataFrame, schema: StructType,
-                       partitionBy: Option[String] = None): Unit = {
-    val dest = new Path(path(table))
-    val tmp = new Path(path(table) + ".tmp-" + java.util.UUID.randomUUID())
-    val w = df.select(schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
-      .write.mode("errorifexists")
-    partitionBy.fold(w)(w.partitionBy(_)).parquet(tmp.toString)
+  /** `t`'s on-disk schema: a banded table carries its band column. */
+  private def fullSchema(t: Table): StructType =
+    t.band.fold(t.schema)(b =>
+      StructType(t.schema.fields :+ StructField(b.col, IntegerType)))
+
+  private def cast(t: Table, df: DataFrame): DataFrame =
+    df.select(fullSchema(t).fields.toIndexedSeq
+      .map(f => col(f.name).cast(f.dataType)): _*)
+
+  private def swapIn(t: Table, df: DataFrame): Unit = {
+    val dest = new Path(path(t.name))
+    val tmp = new Path(path(t.name) + ".tmp-" + java.util.UUID.randomUUID())
+    val w = cast(t, df).write.mode("errorifexists")
+    t.band.fold(w)(b => w.partitionBy(b.col)).parquet(tmp.toString)
     // the layout marker rides the data's atomic rename, so _layout can
     // never disagree with the dirs beside it (underscore names are
     // invisible to Spark's file listing)
-    if (partitionBy.isDefined) {
+    if (t.band.isDefined) {
       val outS = fs.create(new Path(tmp, "_layout"), true)
-      try outS.write(s"bands=$configuredBands".getBytes(
+      try outS.write(s"bands=$nBands".getBytes(
         java.nio.charset.StandardCharsets.UTF_8))
       finally outS.close()
     }
-    val old = new Path(path(table) + ".old-" + java.util.UUID.randomUUID())
+    val old = new Path(path(t.name) + ".old-" + java.util.UUID.randomUUID())
     // Hadoop rename reports failure by returning false — unchecked, a
     // failed rename silently drops the new index version
     if (fs.exists(dest)) require(fs.rename(dest, old),
-      s"swapIn($table): rename $dest -> $old failed")
+      s"swapIn(${t.name}): rename $dest -> $old failed")
     require(fs.rename(tmp, dest),
-      s"swapIn($table): rename $tmp -> $dest failed — pre-swap in $old")
+      s"swapIn(${t.name}): rename $tmp -> $dest failed — pre-swap in $old")
     fs.delete(old, true)
   }
 
-  protected def read(table: String, schema: StructType): DataFrame = {
+  /** Read a whole table after crash recovery; a banded table's frame
+    * carries its band column from the directory names (callers filtering
+    * on it get partition pruning — only the named dirs' files are listed
+    * and read). */
+  private def readBanded(t: Table): DataFrame = {
     recoverCommits()
-    recoverSwap(table)
-    require(fs.exists(new Path(path(table))),
-      s"index table $table missing under $root — build the index first")
-    spark.read.schema(schema).parquet(path(table))
+    recoverSwap(t.name)
+    if (t.band.isDefined) recoverPartitions(t)
+    require(fs.exists(new Path(path(t.name))),
+      s"index table ${t.name} missing under $root — build the index first")
+    spark.read.schema(fullSchema(t)).parquet(path(t.name))
   }
+
+  /** A table's rows, without the band column. */
+  protected def readTable(t: Table): DataFrame =
+    t.band.fold(readBanded(t))(b => readBanded(t).drop(b.col))
 
   // ------------------------------------------------------------------
   // physically-partitioned tables
 
-  protected def withPart(schema: StructType, partCol: String): StructType =
-    StructType(schema.fields :+ StructField(partCol, IntegerType))
-
-  /** Read a whole partitioned table; the returned frame carries `partCol`
-    * from the directory names (callers filtering on it get partition
-    * pruning — only the named dirs' files are listed and read). */
-  protected def readPartitioned(table: String, partCol: String,
-                                schema: StructType): DataFrame = {
-    recoverCommits()
-    recoverSwap(table)
-    recoverPartitions(table, partCol)
-    require(fs.exists(new Path(path(table))),
-      s"index table $table missing under $root — build the index first")
-    spark.read.schema(withPart(schema, partCol)).parquet(path(table))
-  }
-
   /** Per-partition crash recovery: a kill between a partition's two
-    * renames leaves `<table>/.old-<uuid>-<partCol>=<n>` with the live dir
+    * renames leaves `<table>/.old-<uuid>-<col>=<n>` with the live dir
     * absent — restore it; any other `.old-*`/`.tmp-*` leftovers are
     * post-swap garbage — swept. (Dot-prefixed names are invisible to
     * Spark's file listing, so even unswept leftovers can't pollute a
     * read.) */
-  protected def recoverPartitions(table: String, partCol: String): Unit = {
-    val glob = fs.globStatus(new Path(path(table) + "/.{old,tmp}-*"))
+  private def recoverPartitions(t: Table): Unit = {
+    val partCol = t.band.get.col
+    val glob = fs.globStatus(new Path(path(t.name) + "/.{old,tmp}-*"))
     if (glob == null) return
     glob.foreach { st =>
       val nm = st.getPath.getName
       val marker = nm.indexOf(s"-$partCol=")
       if (nm.startsWith(".old-") && marker > 0) {
-        val live = new Path(path(table) + "/" + nm.substring(marker + 1))
+        val live = new Path(path(t.name) + "/" + nm.substring(marker + 1))
         if (!fs.exists(live))
           require(fs.rename(st.getPath, live),
-            s"recoverPartitions($table): restoring $nm failed")
+            s"recoverPartitions(${t.name}): restoring $nm failed")
         else fs.delete(st.getPath, true)
       } else fs.delete(st.getPath, true)
     }
   }
 
+  /** `df`'s rows in `t`'s columns plus the band column at `n` bands. */
+  private def withBand(t: Table, df: DataFrame, n: Int): DataFrame = {
+    val b = t.band.get
+    df.select(t.schema.fieldNames.toIndexedSeq.map(col): _*)
+      .withColumn(b.col, b.of(col(b.key), n))
+  }
+
   /** Partition-clustered, row-balanced shuffle for a partitioned-table
-    * write: RANGE-partition on (partCol, sortKey, spreadKey) — every
-    * task gets a contiguous, row-balanced slice, so full cluster
-    * parallelism with zero hash-collision skew — then sort
-    * (partCol, sortKey) within tasks. Three write layouts lost A/Bs to
-    * this one: `repartition(dataKey)` scatters every dir across every
-    * task (tasks-per-dir small files the next maintenance read pays
-    * for); `repartition(partCol)` collapses to nParts tasks (the 1000×
-    * text build tripled); hash on a partCol×subs composite throws ~256
-    * balls into 256 bins — a third of the tasks empty, the loaded ones
-    * 2–3×. The spread key (member id / term) gives ranges a
-    * high-cardinality tiebreak so even a single hot partition value
+    * write: RANGE-partition on (band, key, spread) — every task gets a
+    * contiguous, row-balanced slice, so full cluster parallelism with
+    * zero hash-collision skew — then sort (band, key) within tasks.
+    * Three write layouts lost A/Bs to this one: `repartition(dataKey)`
+    * scatters every dir across every task (tasks-per-dir small files the
+    * next maintenance read pays for); `repartition(band)` collapses to
+    * nParts tasks (the 1000× text build tripled); hash on a band×subs
+    * composite throws ~256 balls into 256 bins — a third of the tasks
+    * empty, the loaded ones 2–3×. The spread key (member id) gives
+    * ranges a high-cardinality tiebreak so even a single hot band value
     * splits across tasks; each dir still receives ~tasks/nParts
-    * contiguous key-sorted files, and the leading partCol sort
-    * satisfies the dynamic-partition writer's ordering requirement —
-    * no extra (unstable) sort node to break the key run lengths. */
-  protected def clusteredFor(df: DataFrame, partCol: String,
-                             sortKey: Column,
-                             spreadKey: Column): DataFrame =
-    df.repartitionByRange(col(partCol), sortKey, spreadKey)
-      .sortWithinPartitions(col(partCol), sortKey)
+    * contiguous key-sorted files (tight min/max row-group stats for
+    * probes), and the leading band sort satisfies the dynamic-partition
+    * writer's ordering requirement — no extra (unstable) sort node to
+    * break the key run lengths. */
+  private def clustered(t: Table, df: DataFrame): DataFrame = {
+    val b = t.band.get
+    df.repartitionByRange(col(b.col), col(b.key), col(b.spread))
+      .sortWithinPartitions(col(b.col), col(b.key))
+  }
+
+  private def inParts(t: Table, parts: Seq[Int]): Column =
+    col(t.band.get.col).isin(parts.map(Integer.valueOf): _*)
 
   // ------------------------------------------------------------------
   // atomic multi-table append: staged files + single commit marker
@@ -181,28 +210,23 @@ private[sources] abstract class IndexStore(spark: SparkSession,
   // guaranteed to complete — [[recoverCommits]] rolls the marker forward
   // from every read and maintenance entry point, so a crash between any
   // two file moves, or between the moves and the token publish, heals
-  // into the COMMITTED state with zero self-healing rebuilds (the
-  // pre-round-17 design folded the token after non-atomic moves, leaving
-  // a crash window where the token fell permanently behind and the next
-  // token-gated search paid a full rebuild). The caller-side retry
-  // contract is O(1): pass the pre-batch corpus token as `expectToken` —
-  // if the crashed attempt actually committed, the stored token moved on
-  // and the retry is a no-op; no per-append id-presence scan over the
-  // index is needed (appends are for genuinely-new ids; a re-ingest
-  // goes through the keyed upsert).
+  // into the COMMITTED state with zero self-healing rebuilds. The
+  // caller-side retry contract is O(1): pass the pre-batch corpus token
+  // as `expectToken` — if the crashed attempt actually committed, the
+  // stored token moved on and the retry is a no-op; no per-append
+  // id-presence scan over the index is needed (appends are for
+  // genuinely-new ids; a re-ingest goes through the keyed upsert).
 
   private def markerName(uuid: String) = s"_commit-$uuid"
 
-  /** Append `tables`' batches (each (table, partCol, rows, schema)) and
-    * fold `added` into the covered-corpus token, atomically: one commit
-    * marker covers every table's file moves and the token, so a crash
-    * can never land one table's rows without the other's (the old
-    * two-append text-store window) or the rows without the token. */
-  protected def atomicAppend(
-      tables: Seq[(String, String, DataFrame, StructType)],
-      added: (Long, BigInt, BigInt)): Unit = {
+  /** Append `batches` (each table's banded rows) and fold `added` into the
+    * covered-corpus token, atomically: one commit marker covers every
+    * table's file moves and the token, so a crash can never land one
+    * table's rows without the other's or the rows without the token. */
+  private def atomicAppend(batches: Seq[(Table, DataFrame)],
+                           added: (Long, BigInt, BigInt)): Unit = {
     recoverCommits(sweepStages = true)
-    tables.foreach { case (t, pc, _, _) => recoverPartitions(t, pc) }
+    batches.foreach { case (t, _) => recoverPartitions(t) }
     val uuid = java.util.UUID.randomUUID().toString
     val stageRel = s".stage-$uuid"
     val stage = new Path(root, stageRel)
@@ -211,12 +235,11 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     // checkpointed batch rows, so the writes share nothing; `moves`
     // keeps the tables' declared order (the marker's move list is
     // ordered, and replay depends only on per-move idempotence)
-    val staged = tables.map { case (table, partCol, df, schema) =>
+    val staged = batches.map { case (t, df) =>
       Overlap.future {
-        val full = withPart(schema, partCol)
-        val tdir = new Path(stage, table)
-        df.select(full.fields.map(f => col(f.name).cast(f.dataType)): _*)
-          .write.mode("errorifexists").partitionBy(partCol)
+        val partCol = t.band.get.col
+        val tdir = new Path(stage, t.name)
+        cast(t, df).write.mode("errorifexists").partitionBy(partCol)
           .parquet(tdir.toString)
         val parts = fs.globStatus(new Path(tdir, s"$partCol=*"))
         (if (parts == null) Array[org.apache.hadoop.fs.FileStatus]()
@@ -227,19 +250,19 @@ private[sources] abstract class IndexStore(spark: SparkSession,
               n.startsWith("_") || n.startsWith(".")
             }
             .map { f =>
-              (s"$stageRel/$table/${p.getPath.getName}/${f.getPath.getName}",
-                s"$table/${p.getPath.getName}/${f.getPath.getName}")
+              (s"$stageRel/${t.name}/${p.getPath.getName}/${f.getPath.getName}",
+                s"${t.name}/${p.getPath.getName}/${f.getPath.getName}")
             }
         }
       }
     }
-    // join EVERY staging future before propagating a failure (ADVICE
-    // r17): a sequential flatMap would rethrow the first table's error
-    // while later tables' daemon threads were still writing into the
-    // stage dir — withLease would then release the maintenance lease with
-    // writes in flight, racing the next holder's sweepStages. Joining all
-    // keeps the single-writer contract on the failure path; `moves` stays
-    // in declared table order.
+    // join EVERY staging future before propagating a failure: a
+    // sequential flatMap would rethrow the first table's error while
+    // later tables' daemon threads were still writing into the stage dir
+    // — withLease would then release the maintenance lease with writes in
+    // flight, racing the next holder's sweepStages. Joining all keeps the
+    // single-writer contract on the failure path; `moves` stays in
+    // declared table order.
     val joined = staged.map(f =>
       try Right(f()) catch { case e: Throwable => Left(e) })
     joined.collect { case Left(e) => e } match {
@@ -253,8 +276,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     // the post-append token is computed BEFORE the marker and recorded
     // in it VERBATIM, so recovery republishes — never re-folds (a redo
     // that re-folded would double-count the batch)
-    val target = storedToken().map(foldedOf(_, added,
-      (0L, BigInt(0), BigInt(0))))
+    val target = storedToken().map(foldedOf(_, added, IndexStore.NoTerms))
     writeAtomic(markerName(uuid),
       ("graft-commit-v1" +:
         s"stage=$stageRel" +:
@@ -313,7 +335,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     * UNREFERENCED stage dirs — crashed pre-commit appends that never
     * happened; only the single writer may sweep (a reader must not
     * delete a stage an in-flight append is still writing). */
-  protected def recoverCommits(sweepStages: Boolean = false): Unit = {
+  private def recoverCommits(sweepStages: Boolean = false): Unit = {
     val glob = fs.globStatus(new Path(root, "_commit-*"))
     val all = if (glob == null) Array[org.apache.hadoop.fs.FileStatus]()
       else glob
@@ -331,11 +353,12 @@ private[sources] abstract class IndexStore(spark: SparkSession,
   }
 
   /** Partition values currently present on disk — one directory listing,
-    * no data read. Lets a maintenance op skip the prior-rows lookup scan
+    * no data read. Lets a keyed op skip the prior-rows lookup scan
     * entirely when the batch's own partitions already cover every live
     * one (any evicted row necessarily lives in a covered partition). */
-  protected def existingParts(table: String, partCol: String): Set[Int] = {
-    val glob = fs.globStatus(new Path(s"${path(table)}/$partCol=*"))
+  private def existingParts(t: Table): Set[Int] = {
+    val partCol = t.band.get.col
+    val glob = fs.globStatus(new Path(s"${path(t.name)}/$partCol=*"))
     if (glob == null) Set.empty
     else glob.map(_.getPath.getName.substring(partCol.length + 1).toInt).toSet
   }
@@ -347,14 +370,14 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     * every partition to fold a few is a whole-table job for O(touched)
     * work. `minFiles <= 1` degenerates to every live partition (the
     * full-fold rebuild-cadence form). */
-  protected def fragmentedParts(table: String, partCol: String,
-                                minFiles: Int): Seq[Int] = {
+  private def fragmentedParts(t: Table, minFiles: Int): Seq[Int] = {
     // recover FIRST even on the full-fold path: a partition sitting in a
     // crashed-swap .old-* state has no live dir and would be invisible
     // to the listing — the fold would silently skip it this round
-    recoverPartitions(table, partCol)
-    if (minFiles <= 1) return existingParts(table, partCol).toSeq.sorted
-    val dirs = fs.globStatus(new Path(s"${path(table)}/$partCol=*"))
+    recoverPartitions(t)
+    if (minFiles <= 1) return existingParts(t).toSeq.sorted
+    val partCol = t.band.get.col
+    val dirs = fs.globStatus(new Path(s"${path(t.name)}/$partCol=*"))
     (if (dirs == null) Array[org.apache.hadoop.fs.FileStatus]() else dirs)
       .filter { d =>
         // a dir can vanish between the glob and this listing (a
@@ -375,56 +398,38 @@ private[sources] abstract class IndexStore(spark: SparkSession,
       .sorted.toSeq
   }
 
-  /** Replace ONLY the listed partitions of a partitioned table. `content`
-    * must hold the full replacement rows for exactly those partitions
-    * (including `partCol`); it may read the live partitions — the single
-    * write job executes the plan before any rename. A partition with no
-    * content rows is removed (its rows were all evicted). Maintenance
-    * cost is ∝ touched partitions: one job over their bytes + O(touched)
-    * renames — never a whole-table rewrite.
-    *
-    * Split into [[swapStage]] (the write job) + [[swapCommit]] (the
-    * renames) so a maintenance op can overlap OTHER pre-swap reads (the
-    * eviction token delta) with the staged write (guide §2.6) — both
-    * read the same live, pre-swap state; nothing moves until commit. */
-  protected def swapPartitions(table: String, partCol: String,
-                               parts: Seq[Int], schema: StructType,
-                               content: DataFrame): Unit = {
-    if (parts.isEmpty) { recoverPartitions(table, partCol); return }
-    swapCommit(table, partCol, parts,
-      swapStage(table, partCol, schema, content))
-  }
-
-  /** Phase 1 of [[swapPartitions]]: heal crashed swaps, then execute the
-    * content plan into the table's `.tmp-<uuid>` stage dir. The plan may
-    * read the live partitions, and so may any concurrent pre-swap read
-    * job — no live byte moves until [[swapCommit]]. Every overlapped
-    * read MUST be joined before commit is called. */
-  protected def swapStage(table: String, partCol: String,
-                          schema: StructType, content: DataFrame): Path = {
-    recoverPartitions(table, partCol)
-    val tmp = new Path(s"${path(table)}/.tmp-${java.util.UUID.randomUUID()}")
-    val full = withPart(schema, partCol)
-    content.select(full.fields.map(f => col(f.name).cast(f.dataType)): _*)
-      .write.mode("errorifexists").partitionBy(partCol).parquet(tmp.toString)
+  /** Phase 1 of replacing some partitions of a banded table: heal crashed
+    * swaps, then execute the `content` plan (the full replacement rows of
+    * exactly the partitions [[swapCommit]] will name) into the table's
+    * `.tmp-<uuid>` stage dir. The plan may read the live partitions, and
+    * so may any concurrent pre-swap read job — no live byte moves until
+    * [[swapCommit]]. Every overlapped read MUST be joined before commit
+    * is called. Cost is ∝ touched partitions: one job over their bytes +
+    * O(touched) renames — never a whole-table rewrite. */
+  private def swapStage(t: Table, content: DataFrame): Path = {
+    recoverPartitions(t)
+    val tmp = new Path(s"${path(t.name)}/.tmp-${java.util.UUID.randomUUID()}")
+    cast(t, content).write.mode("errorifexists").partitionBy(t.band.get.col)
+      .parquet(tmp.toString)
     tmp
   }
 
-  /** Phase 2 of [[swapPartitions]]: the per-partition renames (identical
-    * crash windows to the pre-split form — recoverPartitions heals
-    * .old-* remnants) and the stage-dir cleanup. */
-  protected def swapCommit(table: String, partCol: String,
-                           parts: Seq[Int], tmp: Path): Unit = {
+  /** Phase 2: the per-partition renames (a crash between a partition's
+    * two renames leaves an `.old-*` remnant that [[recoverPartitions]]
+    * heals) and the stage-dir cleanup. A partition with no staged rows is
+    * removed (its rows were all evicted). */
+  private def swapCommit(t: Table, parts: Seq[Int], tmp: Path): Unit = {
+    val partCol = t.band.get.col
     val uuid = tmp.getName.stripPrefix(".tmp-")
     parts.foreach { b =>
       val src = new Path(tmp, s"$partCol=$b")
-      val dest = new Path(s"${path(table)}/$partCol=$b")
+      val dest = new Path(s"${path(t.name)}/$partCol=$b")
       if (fs.exists(src)) {
-        val old = new Path(s"${path(table)}/.old-$uuid-$partCol=$b")
+        val old = new Path(s"${path(t.name)}/.old-$uuid-$partCol=$b")
         if (fs.exists(dest)) require(fs.rename(dest, old),
-          s"swapPartitions($table): rename $dest -> $old failed")
+          s"swapCommit(${t.name}): rename $dest -> $old failed")
         require(fs.rename(src, dest),
-          s"swapPartitions($table): rename $src -> $dest failed — " +
+          s"swapCommit(${t.name}): rename $src -> $dest failed — " +
             s"pre-swap in $old")
         fs.delete(old, true)
       } else {
@@ -453,7 +458,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     }
   }
 
-  protected def clearMeta(): Unit = {
+  private def clearMeta(): Unit = {
     fs.delete(new Path(path("_meta")), false)
     fs.delete(new Path(path("_token")), false)
     // a full build supersedes any pending append: a commit marker
@@ -482,7 +487,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
       s"writeAtomic: publishing $name failed")
   }
 
-  protected def publishMeta(meta: String): Unit = writeAtomic("_meta", meta)
+  private def publishMeta(meta: String): Unit = writeAtomic("_meta", meta)
 
   // ------------------------------------------------------------------
   // covered-corpus version token
@@ -521,15 +526,14 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     * caller holds? One small file read; no job over any table. */
   def isCurrent(token: String): Boolean = storedToken().contains(token)
 
-  protected def publishToken(token: String): Unit =
+  private def publishToken(token: String): Unit =
     writeAtomic("_token", token)
 
-  /** (rows, Σid, Σhash) of a maintenance delta — the commutative terms
-    * [[foldToken]] adds/subtracts. `hash` must be the same per-row hash
-    * the family's fingerprint scan uses. */
-  protected def deltaOf(df: DataFrame,
-                        hash: Column): (Long, BigInt, BigInt) =
-    CorpusToken.terms(df, col("id"), hash)
+  /** (rows, Σid, Σfp) of ledger rows — the commutative terms
+    * [[foldToken]] adds/subtracts. `fp` is the same per-row hash the
+    * store's fingerprint scan uses. */
+  private def deltaOf(df: DataFrame): (Long, BigInt, BigInt) =
+    CorpusToken.terms(df, col("id"), col("fp"))
 
   private val tokenRe =
     """^([^|]+)\|n=(-?\d+)\|sumid=(-?\d+)\|chk=(-?\d+)\|(.*)$""".r
@@ -554,12 +558,180 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     * corpus version the index does not actually cover), and a full retry
     * of a SWAP-based op re-runs against the already-swapped state, so
     * its added and removed terms cancel and the fold nets zero — the
-    * token converges. The APPEND paths do not use this: their fold rides
-    * the [[atomicAppend]] commit marker, so token and data move
-    * together. An absent token stays absent. */
-  protected def foldToken(added: (Long, BigInt, BigInt),
-                          removed: (Long, BigInt, BigInt)): Unit =
+    * token converges. [[append]] does not use this: its fold rides the
+    * [[atomicAppend]] commit marker, so token and data move together.
+    * An absent token stays absent. */
+  private def foldToken(added: (Long, BigInt, BigInt),
+                        removed: (Long, BigInt, BigInt)): Unit =
     storedToken().foreach(t => publishToken(foldedOf(t, added, removed)))
+
+  // ------------------------------------------------------------------
+  // the maintenance lifecycle, once for every store
+  //
+  // Every op holds the lease and runs over the store's banded tables
+  // concurrently (Overlap.jobs, guide §2.6): each table lives under its
+  // own directory, and each content plan reads only its own table plus
+  // checkpointed batch frames, so one table's swap can never be seen by
+  // another's plan. The token fold runs after every swap.
+
+  /** Persist a full build: every table swaps in first (banded ones
+    * band-clustered, each with its `_layout` marker), the fingerprint
+    * lands last. `meta` is by name: the builds pass a token fold over
+    * their already-checkpointed frames, which reads no index table, so
+    * it runs on a driver thread overlapped with the swaps. Crash safety:
+    * `_meta`/`_token` are cleared first and land only after EVERY swap
+    * finished, so any partial combination reads as stale and
+    * rebuild-gates. */
+  def writeIndex(meta: => String, frames: (Table, DataFrame)*): Unit =
+    withLease("writeIndex") {
+      require(frames.map(_._1).toSet == tables.toSet,
+        s"writeIndex needs one frame per table of $root")
+      clearMeta()
+      val tok = Overlap.future(meta)
+      // joining: the fold must not outlive the lease if a swap fails
+      val m = Overlap.joining(tok)(Overlap.jobs(frames.map { case (t, df) =>
+        () => swapIn(t, t.band.fold(df)(_ => clustered(t,
+          withBand(t, df, nBands))))
+      }: _*))
+      publishToken(m)
+      publishMeta(m)
+    }
+
+  /** Keyed incremental maintenance: replace-or-add `frames`' rows by id.
+    * The eviction keys are the ledger batch's ids ∪ `evictIds` (which may
+    * name ids that bring no new rows — a document re-posted with no text
+    * leaves the covered corpus — but is never trusted alone: the batch's
+    * own ids drive the touched-band arithmetic, or batch rows outside
+    * the named bands would be dropped while their terms fold in, putting
+    * the token AHEAD of the data). Every banded table drops the evicted
+    * ids' rows wherever they lived (a re-ingested vector may have moved
+    * cells) and takes its batch rows; only the touched bands are
+    * rewritten. `_meta` is untouched — it vouches for the base build the
+    * extension rides on, and [[isFresh]] keeps answering true — while
+    * the covered-corpus `_token` folds the batch's ledger terms in and
+    * the evicted rows' terms out, so [[isCurrent]] tracks exactly what
+    * the index covers. Batch frames are materialized before any swap, so
+    * a plan deriving them from this store's own tables can never re-read
+    * a just-replaced directory. */
+  def upsert(frames: Seq[(Table, DataFrame)],
+             evictIds: Option[DataFrame]): Unit =
+    withLease("upsert")(maintain(frames, evictIds))
+
+  /** The forget path: remove `ids` (one column, `id`) from every banded
+    * table — physically gone, not tombstoned, so a deleted item can never
+    * be a search candidate again. Summary tables (centroids, cells,
+    * codebooks) are untouched between rebuilds, exactly how production
+    * IVF handles deletes. Only the bands holding doomed rows are
+    * rewritten; absent ids are a no-op, so the call is idempotent. The
+    * covered-corpus `_token` drops the forgotten rows' ledger terms. */
+  def delete(ids: DataFrame): Unit =
+    withLease("delete")(maintain(Nil, Some(ids)))
+
+  /** O(batch) ingest for GENUINELY-NEW ids — the LSM/segment-style
+    * append: the batch's files land INSIDE their bands without reading
+    * or rewriting ANY existing byte ([[upsert]]'s kept-side rewrite
+    * exists to EVICT re-ingested ids; with nothing to evict it is pure
+    * waste — and for text, whose whole-document batches hash into every
+    * term bucket, the keyed upsert is a full rewrite by construction).
+    * Every table's files and the token publish under ONE commit marker
+    * ([[atomicAppend]]): the append either fully happened or not at all
+    * (an id's rows can straddle writer files or tables; the marker's
+    * roll-forward keeps them together), so the retry discipline is the
+    * caller's O(1) token check — no id-presence scan. The caller owns the
+    * new-ids guarantee; a CHANGED item under an existing id must go
+    * through [[upsert]]. Appends accumulate small files per band;
+    * [[compact]] folds them back. */
+  def append(frames: (Table, DataFrame)*): Unit = withLease("append") {
+    // batch-sized; materialized once — consumed by the staged file
+    // write AND the token delta
+    val batch = frames.map { case (t, df) =>
+      t -> withBand(t, df, liveBands(t)).localCheckpoint(true) }
+    val (lt, rows) = ledger
+    atomicAppend(batch.map { case (t, inc) => t -> clustered(t, inc) },
+      deltaOf(batch.toMap.apply(lt).where(rows)))
+  }
+
+  /** Fold append-accumulated files back into the clustered layout, one
+    * staged rewrite per banded table. The default (`minFiles = 1`) folds
+    * every live band — the rebuild-cadence whole-table form; `minFiles
+    * >= 2` folds only bands whose file count reached the threshold
+    * ([[fragmentedParts]], file metadata only), so steady-state
+    * compaction cost is ∝ the bands appends actually fragmented. Rows and
+    * censuses are unchanged either way; untouched bands' files are not
+    * rewritten. */
+  def compact(minFiles: Int = 1): Unit = withLease("compact") {
+    Overlap.jobs(banded.map { t => () =>
+      val parts = fragmentedParts(t, minFiles)
+      if (parts.nonEmpty)
+        swapCommit(t, parts, swapStage(t,
+          clustered(t, readBanded(t).where(inParts(t, parts)))))
+    }: _*)
+  }
+
+  /** [[upsert]] and [[delete]]: a delete is an upsert with no batch. */
+  private def maintain(frames: Seq[(Table, DataFrame)],
+                       evictIds: Option[DataFrame]): Unit = {
+    // batch-sized; materialized once because the plans below read it for
+    // the band census, the eviction keys, the token delta and the content
+    val batch = frames.map { case (t, df) =>
+      t -> withBand(t, df, liveBands(t)).localCheckpoint(true) }.toMap
+    val (lt, rows) = ledger
+    val batchIds = batch.get(lt).map(_.select(col("id")))
+    val ids = evictIds.fold(batchIds.get.distinct())(e =>
+      (e.select(col("id")) +: batchIds.toSeq).reduce(_ unionByName _)
+        .distinct().localCheckpoint(true))
+    var (added, removed) = (IndexStore.NoTerms, IndexStore.NoTerms)
+    Overlap.jobs(banded.map { t => () =>
+      val inc = batch.get(t)
+      val live = readBanded(t)
+      val touched = touchedParts(t, inc, ids, live)
+      val kept = live.where(inParts(t, touched))
+      // the ledger's token terms — evicted rows out, batch rows in —
+      // overlapped with the staged write: all read pre-swap state
+      val terms = if (t != lt) Nil else Seq(
+        Overlap.future(deltaOf(kept.where(rows)
+          .join(ids, Seq("id"), "left_semi"))),
+        Overlap.future(inc.fold(IndexStore.NoTerms)(i =>
+          deltaOf(i.where(rows)))))
+      val tmp = Option.when(touched.nonEmpty)(
+        Overlap.guarding(terms: _*)(swapStage(t, clustered(t,
+          inc.foldLeft(kept.join(ids, Seq("id"), "left_anti"))(
+            _ unionByName _)))))
+      // every delta joined strictly BEFORE any rename
+      terms.map(_()) match {
+        case Seq(r, a) => removed = r; added = a
+        case _ =>
+      }
+      tmp.foreach(swapCommit(t, touched, _))
+    }: _*)
+    foldToken(added, removed)
+  }
+
+  /** The bands a keyed op rewrites: the batch's own ∪ those holding prior
+    * rows of `ids`. When the band key is the id itself those are
+    * arithmetic — one job over the batch and the ids, no table scan;
+    * otherwise an (id, band)-only column scan finds them, skipped when
+    * the batch's bands already cover every live one (a broad batch pays
+    * zero lookup cost; for a narrow one the scan is also what keeps the
+    * rewrite narrow). */
+  private def touchedParts(t: Table, inc: Option[DataFrame], ids: DataFrame,
+                           live: DataFrame): Seq[Int] = {
+    val b = t.band.get
+    def bands(df: DataFrame) =
+      df.select(col(b.col)).distinct().collect().map(_.getInt(0)).toSeq
+    if (b.key == "id") {
+      val idBands = ids.select(b.of(col("id"), liveBands(t)).as(b.col))
+      bands(inc.fold(idBands)(_.select(col(b.col)).unionByName(idBands)))
+        .sorted
+    } else {
+      val fresh = inc.fold(Seq.empty[Int])(bands)
+      val prior =
+        if (existingParts(t).subsetOf(fresh.toSet)) Nil
+        else bands(live.select(col(b.col), col("id"))
+          .join(ids, Seq("id"), "left_semi"))
+      (fresh ++ prior).distinct.sorted
+    }
+  }
 
   // ------------------------------------------------------------------
   // single-writer lease
@@ -578,7 +750,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
   /** Run `body` holding this store's maintenance lease. Throws (does not
     * wait) when another live maintainer holds it: maintenance is batch
     * work — the caller's scheduler owns queueing, not a file lock. */
-  protected def withLease[T](op: String)(body: => T): T = {
+  private def withLease[T](op: String)(body: => T): T = {
     val lease = new Path(path("_lease"))
     val me = java.util.UUID.randomUUID().toString
     def readLease(): Option[String] =
@@ -628,15 +800,47 @@ private[sources] abstract class IndexStore(spark: SparkSession,
 }
 
 private[graft] object IndexStore {
+  /** Band count new layouts of every store are written with (a store's
+    * `nBands`). Sized so single-node tests keep per-band files
+    * non-trivial; a 1000-executor deployment raises it (bands are
+    * independent, so the count only trades maintenance granularity
+    * against file count). The count an index was BUILT with is persisted
+    * in its `_layout` marker and governs all maintenance on it. */
+  val Bands = 16
+
+  /** One stored table: its name, its schema and, for a
+    * directory-partitioned table, its [[Band]]ing. */
+  private[sources] final case class Table(name: String, schema: StructType,
+                                          band: Option[Band] = None)
+
+  /** How a partitioned table bands its rows: partition column `col` =
+    * `of(key, nBands)`. Rows are sorted by `key` within a band (so probes
+    * row-group-prune on it) and spread across writer tasks by `spread`,
+    * a high-cardinality tiebreak — never the key when one band can hold
+    * a single key value. */
+  private[sources] final case class Band(col: String, key: String,
+                                         of: (Column, Int) => Column,
+                                         spread: String = "id")
+
+  private[sources] def modBand(c: Column, n: Int): Column =
+    pmod(c, lit(n.toLong)).cast("int")
+
+  /** Internal layout only — band values never reach query output, so the
+    * Spark-specific hash is fine. */
+  private[sources] def hashBand(c: Column, n: Int): Column =
+    modBand(xxhash64(c), n)
+
+  private[sources] val NoTerms: (Long, BigInt, BigInt) = (0L, BigInt(0), BigInt(0))
+
   /** Maintenance-lease TTL — how long a DEAD maintainer (crashed without
     * running its release) blocks the next one. */
   private[graft] val LeaseTtlMs: Long = 15L * 60 * 1000
 
-  /** Test-only failpoint: [[atomicAppend]]/[[replayCommit]] call
-    * `maybeCrash(step)` at every publish step ("staged", "marker",
-    * "move-<i>", "token"); a spec sets this predicate to kill the append
-    * at an exact step and then proves recovery rolls the commit forward.
-    * Always false outside specs. */
+  /** Test-only failpoint: the append commit path calls `maybeCrash(step)`
+    * at every publish step ("staged", "marker", "move-<i>", "token"); a
+    * spec sets this predicate to kill the append at an exact step and
+    * then proves recovery rolls the commit forward. Always false outside
+    * specs. */
   @volatile private[graft] var crashAt: String => Boolean = _ => false
 
   private[graft] final class InjectedCrash(step: String)
@@ -656,42 +860,28 @@ private[graft] object IndexStore {
     rootLocks.computeIfAbsent(root, _ => new Object)
 }
 
-object VectorIndex {
-  /** Physical posting partitions (`cid_band = cid mod PostingBands`).
-    * Sized so single-node tests keep per-band files non-trivial; a
-    * 1000-executor deployment raises it (bands are independent, so the
-    * constant only trades maintenance granularity against file count).
-    * The count an index was BUILT with is persisted in its `_layout`
-    * marker and governs all maintenance on it — raising this default
-    * affects new builds only. */
-  val PostingBands = 16
-}
-
 /** Stored IVF index — see [[graft.operators.Similarity.ivfBuildStored]].
   *
   * Layout under `root/`:
   *   - `centroids/`  (cid, cv array<double>, cn) — K rows, broadcast-sized.
   *   - `postings/cid_band=N/`  (cid, id, v array<double>, nrm, fp) — the
-  *     inverted lists, directory-partitioned on cid mod
-  *     [[VectorIndex.PostingBands]] and cid-sorted within files, so a
-  *     probe of p cells row-group-prunes to ~p/K of the bytes AND an
-  *     ingest/delete batch rewrites only the bands holding its cells —
-  *     maintenance ∝ touched cells, not corpus (the q149/q152 lesson:
-  *     the round-14 flat layout measured corpus-linear at the 1000×
-  *     decade).
+  *     inverted lists, directory-partitioned on cid mod `nBands` and
+  *     cid-sorted within files, so a probe of p cells row-group-prunes to
+  *     ~p/K of the bytes AND an ingest/delete batch rewrites only the
+  *     bands holding its cells — maintenance ∝ touched cells, not corpus
+  *     (the round-14 flat layout measured corpus-linear at the 1000×
+  *     decade). The postings are also the token ledger.
   */
 final class VectorIndex(spark: SparkSession, root: String,
-                        val nBands: Int = VectorIndex.PostingBands)
-    extends IndexStore(spark, root) {
-  override protected def configuredBands: Int = nBands
-
-  private val centroidSchema = StructType.fromDDL(
-    "cid BIGINT, cv ARRAY<DOUBLE>, cn DOUBLE")
-  private val postingSchema = StructType.fromDDL(
-    "cid BIGINT, id BIGINT, v ARRAY<DOUBLE>, nrm DOUBLE, fp BIGINT")
-
-  private def band(c: Column, n: Int): Column =
-    pmod(c, lit(n.toLong)).cast("int")
+                        nBands: Int = IndexStore.Bands)
+    extends IndexStore(spark, root, nBands) {
+  private val Centroids = Table("centroids",
+    StructType.fromDDL("cid BIGINT, cv ARRAY<DOUBLE>, cn DOUBLE"))
+  private val Postings = Table("postings", StructType.fromDDL(
+      "cid BIGINT, id BIGINT, v ARRAY<DOUBLE>, nrm DOUBLE, fp BIGINT"),
+    Some(Band("cid_band", "cid", IndexStore.modBand)))
+  protected val tables: Seq[Table] = Seq(Postings, Centroids)
+  protected val ledger: (Table, Column) = (Postings, lit(true))
 
   /** Per-row content hash, identical to the fingerprint scan's term
     * (the scan hashes (id, toDouble(vec)); v IS toDouble(vec)) — stored
@@ -700,192 +890,16 @@ final class VectorIndex(spark: SparkSession, root: String,
   private def fpOf(df: DataFrame): DataFrame =
     df.withColumn("fp", xxhash64(col("id"), col("v")))
 
-  def readCentroids(): DataFrame = read("centroids", centroidSchema)
-  def readPostings(): DataFrame = postingsWithBand().drop("cid_band")
+  def readCentroids(): DataFrame = readTable(Centroids)
+  def readPostings(): DataFrame = readTable(Postings)
 
-  private def postingsWithBand(): DataFrame =
-    readPartitioned("postings", "cid_band", postingSchema)
-
-  /** Persist a full build: both tables swap in first, the fingerprint
-    * lands last. Postings hash-partition on cid (whole cells per task)
-    * and sort by (band, cid) within tasks — the band sort satisfies the
-    * dynamic-partition writer's ordering requirement (no extra sort node,
-    * which would be unstable and break the cid run lengths) and each
-    * band dir's files keep tight cid min/max row-group stats. */
   def writeIndex(centroids: DataFrame, postings: DataFrame,
-                 meta: => String): Unit = withLease("writeIndex") {
-    clearMeta()
-    // Overlapped independent jobs (guide §2.6): the two table swaps write
-    // different directories, and `meta` (by-name: the builds pass the
-    // token fold over their already-checkpointed posting frame) reads no
-    // index table — the K-row centroid swap and the fingerprint aggregate
-    // back-fill the corpus-sized postings write's tail instead of
-    // serializing after it. Crash safety is unchanged: _meta/_token were
-    // cleared first and land only after EVERY swap finished, so any
-    // partial combination reads as stale and rebuild-gates.
-    val tok = Overlap.future(meta)
-    // joining: the fold must not outlive the lease if a swap fails
-    val m = Overlap.joining(tok)(Overlap.jobs(
-      () => swapIn("postings",
-        fpOf(postings)
-          .withColumn("cid_band", band(col("cid"), configuredBands))
-          .transform(clusteredFor(_, "cid_band", col("cid"), col("id"))),
-        withPart(postingSchema, "cid_band"),
-        partitionBy = Some("cid_band")),
-      () => swapIn("centroids", centroids, centroidSchema)))
-    publishToken(m)
-    publishMeta(m)
-  }
-
-  /** Incremental maintenance: upsert `incoming` (cid, id, v, nrm) rows
-    * into the posting lists keyed on id — new vectors land in their
-    * assigned cells, re-ingested ids replace their old rows (an id whose
-    * vector changed may MOVE cells; the eviction finds the stale row
-    * wherever it lived). Touched partitions = the batch's own bands ∪ the
-    * bands holding prior rows of its ids (found by an (id, band)-only
-    * column scan — parquet prunes every other column); ONLY those bands
-    * are rewritten. `_meta` is untouched: it vouches for the BASE build,
-    * and [[isFresh]] deliberately keeps answering true — the extension
-    * is additive, not staleness. The covered-corpus `_token` IS folded
-    * (added batch terms in, evicted rows' terms out — the latter read
-    * from the stored fp column, band-pruned), so [[isCurrent]] keeps
-    * tracking exactly what the index covers. */
-  def upsertPostings(incoming: DataFrame): Unit =
-    withLease("upsertPostings") {
-    // batch-sized; materialized once because the plan below reads it for
-    // the band census, the eviction keys, and the union content
-    val inc = fpOf(incoming
-        .select(col("cid"), col("id"), col("v"), col("nrm")))
-      .withColumn("cid_band", band(col("cid"), liveBands("postings")))
-      .localCheckpoint(true)
-    val ids = inc.select(col("id")).distinct()
-    val pb = postingsWithBand()
-    val newBands = inc.select(col("cid_band")).distinct()
-      .collect().map(_.getInt(0))
-    // prior rows of re-ingested ids may live in OTHER bands (a moved
-    // vector) — found by an (id, band)-only column scan, skipped when the
-    // batch's own bands already cover every live one
-    val oldBands =
-      if (existingParts("postings", "cid_band").subsetOf(newBands.toSet))
-        Array.empty[Int]
-      else pb.select(col("cid_band"), col("id"))
-        .join(ids, Seq("id"), "left_semi")
-        .select(col("cid_band")).distinct().collect().map(_.getInt(0))
-    val touched = (newBands ++ oldBands).distinct.sorted
-    // Token deltas overlapped with the staged write (r18, guide §2.6 —
-    // the swapStage/swapCommit split): the eviction delta reads the SAME
-    // live pre-swap bands the content plan reads (read-read, safe), the
-    // batch delta reads only the checkpointed inc — both are joined
-    // strictly BEFORE any rename, so no read can see a half-swapped
-    // table, and the fold still runs after the swap (crash leaves the
-    // token behind the data, the conservative direction, unchanged).
-    val removedT = Overlap.future(deltaOf(
-      pb.where(col("cid_band").isin(touched.map(Integer.valueOf): _*))
-        .join(ids, Seq("id"), "left_semi"), col("fp")))
-    val addedT = Overlap.future(deltaOf(inc, col("fp")))
-    if (touched.nonEmpty) {
-      val tmp = Overlap.guarding(removedT, addedT)(
-        swapStage("postings", "cid_band", postingSchema,
-          pb.where(col("cid_band").isin(touched.map(Integer.valueOf): _*))
-            .join(ids, Seq("id"), "left_anti")
-            .unionByName(inc)
-            .transform(clusteredFor(_, "cid_band", col("cid"), col("id")))))
-      val (removed, added) = (removedT(), addedT())
-      swapCommit("postings", "cid_band", touched.toIndexedSeq, tmp)
-      foldToken(added, removed)
-    } else foldToken(addedT(), removedT())
-  }
-
-  /** O(batch) ingest for GENUINELY-NEW ids — the LSM/segment-style
-    * append: the batch's posting files land INSIDE their cid bands
-    * without reading or rewriting ANY existing byte
-    * ([[upsertPostings]]' kept-side rewrite exists to EVICT re-ingested
-    * ids; when there is nothing to evict, the rewrite is pure waste).
-    * Files and token publish under ONE commit marker
-    * ([[IndexStore.atomicAppend]]): the append either fully happened
-    * (token folded) or not at all, so the retry discipline is the O(1)
-    * token check (`expectToken` on the operator entry points) — no
-    * per-append id-presence scan over the index. The caller owns the
-    * new-ids guarantee (its corpus versioning already knows); a CHANGED
-    * vector under an existing id must go through [[upsertPostings]].
-    * Appends accumulate small files per band; [[compactPostings]] folds
-    * them back on the rebuild cadence. */
-  def appendPostings(incoming: DataFrame): Unit =
-    withLease("appendPostings") {
-      // batch-sized; materialized once — consumed by the staged file
-      // write AND the token delta
-      val inc = fpOf(incoming
-          .select(col("cid"), col("id"), col("v"), col("nrm")))
-        .withColumn("cid_band", band(col("cid"), liveBands("postings")))
-        .localCheckpoint(true)
-      atomicAppend(
-        Seq(("postings", "cid_band",
-          clusteredFor(inc, "cid_band", col("cid"), col("id")),
-          postingSchema)),
-        deltaOf(inc, col("fp")))
-    }
-
-  /** Fold append-accumulated files back into the clustered layout — one
-    * [[swapPartitions]] pass over the selected bands. The default
-    * (`minFiles = 1`) folds every live band — the rebuild-cadence
-    * whole-table form; `minFiles >= 2` folds only bands whose file count
-    * reached the threshold ([[IndexStore.fragmentedParts]], file metadata
-    * only), so steady-state compaction cost is ∝ the bands appends
-    * actually fragmented, never the whole table. Rows and censuses are
-    * unchanged either way; untouched bands' files are not rewritten. */
-  def compactPostings(minFiles: Int = 1): Unit =
-    withLease("compactPostings") {
-    val parts = fragmentedParts("postings", "cid_band", minFiles)
-    if (parts.isEmpty) return
-    swapPartitions("postings", "cid_band", parts.toIndexedSeq,
-      postingSchema,
-      clusteredFor(
-        postingsWithBand()
-          .where(col("cid_band").isin(parts.map(Integer.valueOf): _*)),
-        "cid_band", col("cid"), col("id")))
-  }
-
-  /** Remove `ids` (one column, `id`) from the posting lists — the
-    * right-to-be-forgotten path: subsequent searches can never return a
-    * deleted id because its vector is physically gone from the inverted
-    * lists (not tombstoned). Centroids are untouched (they are summaries,
-    * not member data — exactly how production IVF handles deletes between
-    * rebuilds); absent ids are a no-op, so the call is idempotent. Only
-    * the bands holding doomed rows (one (id, band) column scan) are
-    * rewritten. `_meta` stays, like [[upsertPostings]]: the base build
-    * it vouches for is still the index's lineage; the covered-corpus
-    * `_token` drops the forgotten rows' terms. */
-  def deletePostings(ids0: DataFrame): Unit =
-    withLease("deletePostings") {
-    val ids = ids0.select(col("id")).distinct().localCheckpoint(true)
-    val pb = postingsWithBand()
-    val touched = pb.select(col("cid_band"), col("id"))
-      .join(ids, Seq("id"), "left_semi")
-      .select(col("cid_band")).distinct().collect().map(_.getInt(0)).sorted
-    // doomed rows' token terms, read band-pruned — overlapped with the
-    // staged write (both read pre-swap state; joined before any rename)
-    val removedT = Overlap.future(deltaOf(
-      pb.where(col("cid_band").isin(touched.map(Integer.valueOf): _*))
-        .join(ids, Seq("id"), "left_semi"), col("fp")))
-    if (touched.nonEmpty) {
-      val tmp = Overlap.guarding(removedT)(
-        swapStage("postings", "cid_band", postingSchema,
-          pb.where(col("cid_band").isin(touched.map(Integer.valueOf): _*))
-            .join(ids, Seq("id"), "left_anti")
-            .transform(clusteredFor(_, "cid_band", col("cid"), col("id")))))
-      val removed = removedT()
-      swapCommit("postings", "cid_band", touched.toIndexedSeq, tmp)
-      foldToken((0L, BigInt(0), BigInt(0)), removed)
-    } else foldToken((0L, BigInt(0), BigInt(0)), removedT())
-  }
-}
-
-object TextIndex {
-  /** Physical posting partitions (`term_bucket = xxhash64(term) mod
-    * TermBuckets`) and norm partitions (`id_bucket = id mod TermBuckets`).
-    * Internal layout only — bucket values never reach query output, so
-    * the Spark-specific hash is fine. */
-  val TermBuckets = 16
+                 meta: => String): Unit =
+    writeIndex(meta, Postings -> fpOf(postings), Centroids -> centroids)
+  /** `postings`: (cid, id, v, nrm) rows assigned to the stored grid. */
+  def upsert(postings: DataFrame): Unit =
+    upsert(Seq(Postings -> fpOf(postings)), None)
+  def append(postings: DataFrame): Unit = append(Postings -> fpOf(postings))
 }
 
 /** Stored inverted text index — see
@@ -896,299 +910,49 @@ object TextIndex {
   * touch document text.
   *
   * Layout under `root/`:
-  *   - `postings/term_bucket=N/` (term, id, df, w) — the weighted
+  *   - `postings/term_bucket=N/` (term, id, df, tf, w) — the weighted
   *     inverted lists, directory-partitioned on the term hash and
   *     term-sorted within files, so a narrow-term-set probe
   *     row-group-prunes and an ingest/delete rewrites only the buckets
   *     holding its terms; df rides each row (the search-time rare-band
-  *     filter is a scan-level predicate, not a join).
-  *   - `norms/id_bucket=N/` (id, n2 decimal(38,0)) — per-doc squared
+  *     filter is a scan-level predicate, not a join). Per-term df values
+  *     on surviving rows keep their build-time counts through ingest and
+  *     delete (the stale-df contract; drift is absorbed at the next full
+  *     rebuild).
+  *   - `norms/id_bucket=N/` (id, n2 decimal(38,0), fp) — per-doc squared
   *     weight norms, partitioned on the doc id so keyed maintenance
-  *     touches ~|batch| buckets.
+  *     touches ~|batch| buckets, found from the ids without a scan.
   */
 final class TextIndex(spark: SparkSession, root: String,
-                      val nBuckets: Int = TextIndex.TermBuckets)
-    extends IndexStore(spark, root) {
-  override protected def configuredBands: Int = nBuckets
-
+                      nBands: Int = IndexStore.Bands)
+    extends IndexStore(spark, root, nBands) {
   // tf rides every posting row so a stats-refresh rebuild can recompute
   // weights under fresh df without the corpus (w alone is lossy: terms
   // with df > idfScale weigh 0)
-  private val postingSchema = StructType.fromDDL(
-    "term STRING, id BIGINT, df BIGINT, tf BIGINT, w BIGINT")
+  private val Postings = Table("postings", StructType.fromDDL(
+      "term STRING, id BIGINT, df BIGINT, tf BIGINT, w BIGINT"),
+    Some(Band("term_bucket", "term", IndexStore.hashBand)))
   // norms are the per-doc LEDGER: one row per ingested doc (n2 = 0 for a
   // term-less doc) carrying fp = xxhash64(id, text) — the fingerprint
   // term token folds and rebuilds reconstruct without re-reading text
-  private val normSchema = StructType.fromDDL(
-    "id BIGINT, n2 DECIMAL(38,0), fp BIGINT")
+  private val Norms = Table("norms",
+    StructType.fromDDL("id BIGINT, n2 DECIMAL(38,0), fp BIGINT"),
+    Some(Band("id_bucket", "id", IndexStore.modBand)))
+  protected val tables: Seq[Table] = Seq(Postings, Norms)
+  protected val ledger: (Table, Column) = (Norms, lit(true))
 
-  private def tBucket(t: Column, n: Int): Column =
-    pmod(xxhash64(t), lit(n.toLong)).cast("int")
-  private def nBucket(i: Column, n: Int): Column =
-    pmod(i, lit(n.toLong)).cast("int")
-
-  def readPostings(): DataFrame = postingsWithBucket().drop("term_bucket")
-  def readNorms(): DataFrame = normsWithBucket().drop("id_bucket")
-
-  private def postingsWithBucket(): DataFrame =
-    readPartitioned("postings", "term_bucket", postingSchema)
-  private def normsWithBucket(): DataFrame =
-    readPartitioned("norms", "id_bucket", normSchema)
+  def readPostings(): DataFrame = readTable(Postings)
+  def readNorms(): DataFrame = readTable(Norms)
 
   def writeIndex(postings: DataFrame, norms: DataFrame,
-                 meta: => String): Unit = withLease("writeIndex") {
-    clearMeta()
-    // Overlapped independent jobs (guide §2.6; the
-    // [[VectorIndex.writeIndex]] rationale): the postings and norms swaps
-    // write different directories — the build paths hand in frames that
-    // read only checkpointed batch/corpus rows, never these tables — and
-    // the by-name `meta` fold reads no index table. _meta/_token still
-    // land only after every swap finished, so crash combinations read as
-    // stale exactly as before.
-    val tok = Overlap.future(meta)
-    // joining: the fold must not outlive the lease if a swap fails
-    val m = Overlap.joining(tok)(Overlap.jobs(
-      () => swapIn("postings",
-        postings.withColumn("term_bucket",
-            tBucket(col("term"), configuredBands))
-          .transform(clusteredFor(_, "term_bucket", col("term"), col("id"))),
-        withPart(postingSchema, "term_bucket"),
-        partitionBy = Some("term_bucket")),
-      () => swapIn("norms",
-        norms.withColumn("id_bucket", nBucket(col("id"), configuredBands))
-          .transform(clusteredFor(_, "id_bucket", col("id"), col("id"))),
-        withPart(normSchema, "id_bucket"), partitionBy = Some("id_bucket"))))
-    publishToken(m)
-    publishMeta(m)
-  }
-
-  /** Keyed ingest: replace-or-add `postings` rows and `norms` rows by doc
-    * id (a re-ingested doc's old posting rows are evicted from every term
-    * list they lived in). Both incoming frames are materialized
-    * batch-sized BEFORE any swap, so a plan deriving the batch weights
-    * from this store's own postings (the stale-IDF contract) can never
-    * re-read a just-replaced directory. Touched posting buckets = the
-    * batch terms' buckets ∪ buckets holding prior rows of its ids (an
-    * (id, bucket)-only column scan); touched norm buckets are the batch
-    * ids' own. Like [[VectorIndex.upsertPostings]], `_meta` is untouched
-    * — it vouches for the base build the extension rides on — while the
-    * covered-corpus `_token` folds the batch in and the evicted docs'
-    * ledger terms out. */
+                 meta: => String): Unit =
+    writeIndex(meta, Postings -> postings, Norms -> norms)
+  /** `evictIds` widens the batch's doc ids (see [[IndexStore.upsert]]). */
   def upsert(postings: DataFrame, norms: DataFrame,
              evictIds: Option[DataFrame] = None): Unit =
-    withLease("upsert") {
-    val incP = postings
-      .select(col("term"), col("id"), col("df"), col("tf"), col("w"))
-      .withColumn("term_bucket",
-        tBucket(col("term"), liveBands("postings")))
-      .localCheckpoint(true)
-    val incN = norms.select(col("id"), col("n2"), col("fp"))
-      .withColumn("id_bucket", nBucket(col("id"), liveBands("norms")))
-      .localCheckpoint(true)
-    // the EVICTION set: the batch's doc ids, which may be WIDER than the
-    // ledger rows — a doc re-posted with NULL text yields no norm row
-    // (it leaves the covered corpus) but its old posting + ledger rows
-    // must still be evicted and their token terms folded out. A caller's
-    // evictIds is UNIONED with the batch's own ids, never trusted alone:
-    // this set drives the touched-bucket arithmetic, and an evictIds
-    // narrower than the batch would leave incN rows in buckets outside
-    // nTouched — silently dropped by the swap while deltaOf(incN) still
-    // folds their terms in, putting the token AHEAD of the data (the
-    // one direction the foldToken contract forbids)
-    val batchIds = incN.select(col("id")).distinct()
-    val ids = evictIds
-      .map(_.select(col("id")).unionByName(batchIds).distinct()
-        .localCheckpoint(true))
-      .getOrElse(batchIds)
-
-    val added = deltaOf(incN, col("fp"))
-    // Overlapped independent jobs (guide §2.6): the norms side (touched
-    // buckets, evicted-ledger delta, swap) and the postings side (touched
-    // buckets, swap) read and replace DIFFERENT tables; both batch frames
-    // and `ids` are checkpointed above, so neither side's plan can see
-    // the other's swap. The eviction delta still runs strictly before the
-    // norms swap (same thread); the token fold still runs after BOTH
-    // swaps — `Overlap.jobs` joins every thread before returning, and a
-    // crash mid-either-swap leaves the token behind the data, the same
-    // conservative direction the sequential order had.
-    var removed: (Long, BigInt, BigInt) = null
-    Overlap.jobs(
-      () => {
-        val pbk = postingsWithBucket()
-        val newB = incP.select(col("term_bucket")).distinct()
-          .collect().map(_.getInt(0))
-        // a broad-vocabulary batch (e.g. whole re-posted documents)
-        // touches every bucket by construction — the covered-partitions
-        // check makes that case pay zero lookup cost; the scan only runs
-        // for term-narrow batches, where it is also what makes the
-        // rewrite narrow
-        val oldB =
-          if (existingParts("postings", "term_bucket").subsetOf(newB.toSet))
-            Array.empty[Int]
-          else pbk.select(col("term_bucket"), col("id"))
-            .join(ids, Seq("id"), "left_semi")
-            .select(col("term_bucket")).distinct().collect()
-            .map(_.getInt(0))
-        val pTouched = (newB ++ oldB).distinct.sorted
-        swapPartitions("postings", "term_bucket", pTouched.toIndexedSeq,
-          postingSchema,
-          pbk.where(col("term_bucket").isin(pTouched.map(Integer.valueOf): _*))
-            .join(ids, Seq("id"), "left_anti")
-            .unionByName(incP)
-            .transform(clusteredFor(_, "term_bucket", col("term"),
-              col("id"))))
-      },
-      () => {
-        val nTouched = ids
-          .select(nBucket(col("id"), liveBands("norms")).as("id_bucket"))
-          .distinct().collect().map(_.getInt(0)).sorted
-        val nb = normsWithBucket()
-        // evicted docs' token terms from the norm ledger, bucket-pruned —
-        // overlapped with this side's staged write (r18: both read the
-        // same pre-swap buckets; joined before any rename)
-        val removedT = Overlap.future(deltaOf(
-          nb.where(col("id_bucket").isin(nTouched.map(Integer.valueOf): _*))
-            .join(ids, Seq("id"), "left_semi"), col("fp")))
-        if (nTouched.nonEmpty) {
-          val tmp = Overlap.guarding(removedT)(
-            swapStage("norms", "id_bucket", normSchema,
-              nb.where(col("id_bucket")
-                  .isin(nTouched.map(Integer.valueOf): _*))
-                .join(ids, Seq("id"), "left_anti")
-                .unionByName(incN)
-                .transform(clusteredFor(_, "id_bucket", col("id"),
-                  col("id")))))
-          removed = removedT()
-          swapCommit("norms", "id_bucket", nTouched.toIndexedSeq, tmp)
-        } else removed = removedT()
-      })
-    foldToken(added, removed)
-  }
-
-  /** O(batch) ingest for GENUINELY-NEW doc ids ([[VectorIndex.
-    * appendPostings]]' contract for the text store — and the store where
-    * it matters most: a broad-vocabulary batch touches every term
-    * bucket, so the keyed [[upsert]] degenerates to a full rewrite by
-    * construction, while this append writes exactly the batch's rows).
-    * BOTH tables' files and the token publish under ONE commit marker
-    * ([[IndexStore.atomicAppend]]) — a crash can never land the norms
-    * without the postings (the pre-round-17 two-append window), or a
-    * prefix of a doc's posting files, or the rows without the token; the
-    * retry discipline is the caller's O(1) token check, with no
-    * presence anti-join over either table. Re-posted docs must go
-    * through [[upsert]] for eviction. */
-  def appendDocs(postings: DataFrame, norms: DataFrame): Unit =
-    withLease("appendDocs") {
-      val incP = postings
-        .select(col("term"), col("id"), col("df"), col("tf"), col("w"))
-        .withColumn("term_bucket",
-          tBucket(col("term"), liveBands("postings")))
-        .localCheckpoint(true)
-      val incN = norms.select(col("id"), col("n2"), col("fp"))
-        .withColumn("id_bucket", nBucket(col("id"), liveBands("norms")))
-        .localCheckpoint(true)
-      atomicAppend(
-        Seq(
-          ("norms", "id_bucket",
-            clusteredFor(incN, "id_bucket", col("id"), col("id")),
-            normSchema),
-          ("postings", "term_bucket",
-            clusteredFor(incP, "term_bucket", col("term"), col("id")),
-            postingSchema)),
-        deltaOf(incN, col("fp")))
-    }
-
-  /** [[VectorIndex.compactPostings]] for the text store: fold
-    * append-accumulated files in BOTH tables back into the clustered
-    * layout — every live bucket by default, only buckets at the
-    * `minFiles` fragmentation threshold when given. */
-  def compact(minFiles: Int = 1): Unit = withLease("compact") {
-    // Overlapped independent jobs (guide §2.6): the two folds read and
-    // swap DIFFERENT tables (each side's content plan reads only its own
-    // table), so they share no state beyond the lease held here.
-    Overlap.jobs(
-      () => {
-        val pParts = fragmentedParts("postings", "term_bucket", minFiles)
-        if (pParts.nonEmpty)
-          swapPartitions("postings", "term_bucket", pParts.toIndexedSeq,
-            postingSchema,
-            clusteredFor(
-              postingsWithBucket()
-                .where(col("term_bucket")
-                  .isin(pParts.map(Integer.valueOf): _*)),
-              "term_bucket", col("term"), col("id")))
-      },
-      () => {
-        val nParts = fragmentedParts("norms", "id_bucket", minFiles)
-        if (nParts.nonEmpty)
-          swapPartitions("norms", "id_bucket", nParts.toIndexedSeq,
-            normSchema,
-            clusteredFor(
-              normsWithBucket()
-                .where(col("id_bucket").isin(nParts.map(Integer.valueOf): _*)),
-              "id_bucket", col("id"), col("id")))
-      })
-  }
-
-  /** Remove documents from the index — the text-side forget path: drop
-    * every posting row of `ids` (wherever their terms hashed — found by
-    * an (id, bucket)-only column scan) and their norm rows (buckets
-    * derived from the ids directly). Physically gone, not tombstoned: a
-    * forgotten doc can never be a search candidate. Per-term df values on
-    * SURVIVING rows keep their build-time counts (the stale-df contract,
-    * same as ingest — df drift is absorbed at the next full rebuild).
-    * Absent ids are a no-op, so the call is idempotent. */
-  def delete(ids0: DataFrame): Unit = withLease("delete") {
-    val ids = ids0.select(col("id")).distinct().localCheckpoint(true)
-    // Overlapped independent jobs (guide §2.6; the [[upsert]] rationale):
-    // postings side and norms side touch different tables; the ledger
-    // delta still runs strictly before the norms swap, the token fold
-    // after both sides joined.
-    var removed: (Long, BigInt, BigInt) = null
-    Overlap.jobs(
-      () => {
-        val pbk = postingsWithBucket()
-        val pTouched = pbk.select(col("term_bucket"), col("id"))
-          .join(ids, Seq("id"), "left_semi")
-          .select(col("term_bucket")).distinct().collect()
-          .map(_.getInt(0)).sorted
-        swapPartitions("postings", "term_bucket", pTouched.toIndexedSeq,
-          postingSchema,
-          pbk.where(col("term_bucket").isin(pTouched.map(Integer.valueOf): _*))
-            .join(ids, Seq("id"), "left_anti")
-            .transform(clusteredFor(_, "term_bucket", col("term"),
-              col("id"))))
-      },
-      () => {
-        val nTouched = ids
-          .select(nBucket(col("id"), liveBands("norms")).as("id_bucket"))
-          .distinct().collect().map(_.getInt(0)).sorted
-        val nb = normsWithBucket()
-        // forgotten docs' token terms from the ledger — overlapped with
-        // this side's staged write, joined before any rename (r18)
-        val removedT = Overlap.future(deltaOf(
-          nb.where(col("id_bucket").isin(nTouched.map(Integer.valueOf): _*))
-            .join(ids, Seq("id"), "left_semi"), col("fp")))
-        if (nTouched.nonEmpty) {
-          val tmp = Overlap.guarding(removedT)(
-            swapStage("norms", "id_bucket", normSchema,
-              nb.where(col("id_bucket")
-                  .isin(nTouched.map(Integer.valueOf): _*))
-                .join(ids, Seq("id"), "left_anti")
-                .transform(clusteredFor(_, "id_bucket", col("id"),
-                  col("id")))))
-          removed = removedT()
-          swapCommit("norms", "id_bucket", nTouched.toIndexedSeq, tmp)
-        } else removed = removedT()
-      })
-    foldToken((0L, BigInt(0), BigInt(0)), removed)
-  }
-}
-
-object PqIndex {
-  /** Physical code partitions (`cid_band = cid mod CodeBands`) — the
-    * [[VectorIndex.PostingBands]] discipline for the compressed store. */
-  val CodeBands = 16
+    upsert(Seq(Postings -> postings, Norms -> norms), evictIds)
+  def append(postings: DataFrame, norms: DataFrame): Unit =
+    append(Postings -> postings, Norms -> norms)
 }
 
 /** Stored IVF-PQ index — see
@@ -1201,167 +965,37 @@ object PqIndex {
   * Layout under `root/`:
   *   - `cells/`     (cid, cv array<bigint>) — fixed-point cell centers.
   *   - `codebooks/` (s, ccid, csub array<bigint>) — m × kCodes sub-vectors.
-  *   - `codes/cid_band=N/` (cid, id, s, code) — one row per
-  *     (vector, subspace), directory-partitioned on cid mod
-  *     [[PqIndex.CodeBands]] and cid-sorted within files, so searches
-  *     prune to probed cells and keyed maintenance rewrites only touched
-  *     bands.
+  *   - `codes/cid_band=N/` (cid, id, s, code, fp) — one row per
+  *     (vector, subspace), directory-partitioned on cid mod `nBands` and
+  *     cid-sorted within files, so searches prune to probed cells and
+  *     keyed maintenance rewrites only touched bands. No re-encode on
+  *     ingest or delete: codes are per-vector, so a vector's m rows are
+  *     its whole footprint.
   */
 final class PqIndex(spark: SparkSession, root: String,
-                    val nBands: Int = PqIndex.CodeBands)
-    extends IndexStore(spark, root) {
-  override protected def configuredBands: Int = nBands
-
-  private val cellSchema = StructType.fromDDL(
-    "cid BIGINT, cv ARRAY<BIGINT>")
-  private val codebookSchema = StructType.fromDDL(
-    "s INT, ccid BIGINT, csub ARRAY<BIGINT>")
+                    nBands: Int = IndexStore.Bands)
+    extends IndexStore(spark, root, nBands) {
+  private val Cells = Table("cells",
+    StructType.fromDDL("cid BIGINT, cv ARRAY<BIGINT>"))
+  private val Codebooks = Table("codebooks",
+    StructType.fromDDL("s INT, ccid BIGINT, csub ARRAY<BIGINT>"))
   // fp = xxhash64(id, raw vector), set ONLY on the s = 0 row of each id
   // (null elsewhere — RLE-cheap): the per-VECTOR fingerprint term the
   // covered-corpus token folds; raw vectors never enter this store, so
   // the hash must be computed at encode time and ride the codes
-  private val codeSchema = StructType.fromDDL(
-    "cid BIGINT, id BIGINT, s INT, code BIGINT, fp BIGINT")
+  private val Codes = Table("codes",
+    StructType.fromDDL("cid BIGINT, id BIGINT, s INT, code BIGINT, fp BIGINT"),
+    Some(Band("cid_band", "cid", IndexStore.modBand)))
+  protected val tables: Seq[Table] = Seq(Codes, Cells, Codebooks)
+  protected val ledger: (Table, Column) = (Codes, col("s") === 0)
 
-  private def band(c: Column, n: Int): Column =
-    pmod(c, lit(n.toLong)).cast("int")
-
-  def readCells(): DataFrame = read("cells", cellSchema)
-  def readCodebooks(): DataFrame = read("codebooks", codebookSchema)
-  def readCodes(): DataFrame = codesWithBand().drop("cid_band")
-
-  private def codesWithBand(): DataFrame =
-    readPartitioned("codes", "cid_band", codeSchema)
+  def readCells(): DataFrame = readTable(Cells)
+  def readCodebooks(): DataFrame = readTable(Codebooks)
+  def readCodes(): DataFrame = readTable(Codes)
 
   def writeIndex(cells: DataFrame, codebooks: DataFrame, codes: DataFrame,
-                 meta: => String): Unit = withLease("writeIndex") {
-    clearMeta()
-    // Overlapped independent jobs (guide §2.6; the
-    // [[VectorIndex.writeIndex]] rationale): three different directories,
-    // inputs checkpointed by the build, token fold reads no table;
-    // _meta/_token land only after every swap finished.
-    val tok = Overlap.future(meta)
-    // joining: the fold must not outlive the lease if a swap fails
-    val m = Overlap.joining(tok)(Overlap.jobs(
-      () => swapIn("codes",
-        codes.withColumn("cid_band", band(col("cid"), configuredBands))
-          .transform(clusteredFor(_, "cid_band", col("cid"), col("id"))),
-        withPart(codeSchema, "cid_band"), partitionBy = Some("cid_band")),
-      () => swapIn("cells", cells, cellSchema),
-      () => swapIn("codebooks", codebooks, codebookSchema)))
-    publishToken(m)
-    publishMeta(m)
-  }
-
-  /** Keyed code ingest: upsert `incoming` (cid, id, s, code) rows by
-    * vector id — a re-ingested id's old code rows are evicted wherever
-    * they lived (its vector may have moved cells). The
-    * [[VectorIndex.upsertPostings]] discipline: only the batch's bands ∪
-    * the bands holding prior rows of its ids are rewritten. `_meta`
-    * untouched — additive extension over the base build's grid and
-    * codebooks — while the covered-corpus `_token` folds the per-vector
-    * terms riding the s = 0 code rows. */
-  def upsertCodes(incoming: DataFrame): Unit =
-    withLease("upsertCodes") {
-    val inc = incoming
-      .select(col("cid"), col("id"), col("s"), col("code"), col("fp"))
-      .withColumn("cid_band", band(col("cid"), liveBands("codes")))
-      .localCheckpoint(true)
-    val ids = inc.select(col("id")).distinct()
-    val cb = codesWithBand()
-    val newBands = inc.select(col("cid_band")).distinct()
-      .collect().map(_.getInt(0))
-    val oldBands =
-      if (existingParts("codes", "cid_band").subsetOf(newBands.toSet))
-        Array.empty[Int]
-      else cb.select(col("cid_band"), col("id"))
-        .join(ids, Seq("id"), "left_semi")
-        .select(col("cid_band")).distinct().collect().map(_.getInt(0))
-    val touched = (newBands ++ oldBands).distinct.sorted
-    // per-VECTOR token terms live on the s = 0 rows. Deltas overlapped
-    // with the staged write (r18 — the upsertPostings rationale: all
-    // three jobs read pre-swap state; joined before any rename).
-    val removedT = Overlap.future(deltaOf(
-      cb.where(col("cid_band").isin(touched.map(Integer.valueOf): _*))
-        .where(col("s") === 0)
-        .join(ids, Seq("id"), "left_semi"), col("fp")))
-    val addedT = Overlap.future(
-      deltaOf(inc.where(col("s") === 0), col("fp")))
-    if (touched.nonEmpty) {
-      val tmp = Overlap.guarding(removedT, addedT)(
-        swapStage("codes", "cid_band", codeSchema,
-          cb.where(col("cid_band").isin(touched.map(Integer.valueOf): _*))
-            .join(ids, Seq("id"), "left_anti")
-            .unionByName(inc)
-            .transform(clusteredFor(_, "cid_band", col("cid"), col("id")))))
-      val (removed, added) = (removedT(), addedT())
-      swapCommit("codes", "cid_band", touched.toIndexedSeq, tmp)
-      foldToken(added, removed)
-    } else foldToken(addedT(), removedT())
-  }
-
-  /** O(batch) code ingest for GENUINELY-NEW ids ([[VectorIndex.
-    * appendPostings]]' contract for the compressed store); re-encoded
-    * existing ids must go through [[upsertCodes]] for eviction. Files
-    * and token publish under ONE commit marker ([[IndexStore.
-    * atomicAppend]]): an id's m subspace rows can straddle a writer
-    * file boundary, and the marker's roll-forward is what guarantees a
-    * crash can never strand a prefix of them — the retry discipline is
-    * the caller's O(1) token check, with no (id, s) presence scan over
-    * the code rows. */
-  def appendCodes(incoming: DataFrame): Unit =
-    withLease("appendCodes") {
-      // materialized: consumed by the staged file write AND the delta
-      val inc = incoming
-        .select(col("cid"), col("id"), col("s"), col("code"), col("fp"))
-        .withColumn("cid_band", band(col("cid"), liveBands("codes")))
-        .localCheckpoint(true)
-      atomicAppend(
-        Seq(("codes", "cid_band",
-          clusteredFor(inc, "cid_band", col("cid"), col("id")),
-          codeSchema)),
-        deltaOf(inc.where(col("s") === 0), col("fp")))
-    }
-
-  /** [[VectorIndex.compactPostings]] for the code rows. */
-  def compactCodes(minFiles: Int = 1): Unit =
-    withLease("compactCodes") {
-    val parts = fragmentedParts("codes", "cid_band", minFiles)
-    if (parts.isEmpty) return
-    swapPartitions("codes", "cid_band", parts.toIndexedSeq, codeSchema,
-      clusteredFor(
-        codesWithBand()
-          .where(col("cid_band").isin(parts.map(Integer.valueOf): _*)),
-        "cid_band", col("cid"), col("id")))
-  }
-
-  /** Remove `ids` from the stored code rows — the PQ forget path. No
-    * re-encode: codes are per-vector, so dropping a vector's m rows is
-    * complete removal (cells and codebooks are summaries, untouched
-    * between rebuilds). Only bands holding doomed rows are rewritten;
-    * absent ids are a no-op, so the call is idempotent. */
-  def deleteCodes(ids0: DataFrame): Unit =
-    withLease("deleteCodes") {
-    val ids = ids0.select(col("id")).distinct().localCheckpoint(true)
-    val cb = codesWithBand()
-    val touched = cb.select(col("cid_band"), col("id"))
-      .join(ids, Seq("id"), "left_semi")
-      .select(col("cid_band")).distinct().collect().map(_.getInt(0)).sorted
-    // doomed rows' terms overlapped with the staged write (pre-swap
-    // read-read; joined before any rename — the deletePostings shape)
-    val removedT = Overlap.future(deltaOf(
-      cb.where(col("cid_band").isin(touched.map(Integer.valueOf): _*))
-        .where(col("s") === 0)
-        .join(ids, Seq("id"), "left_semi"), col("fp")))
-    if (touched.nonEmpty) {
-      val tmp = Overlap.guarding(removedT)(
-        swapStage("codes", "cid_band", codeSchema,
-          cb.where(col("cid_band").isin(touched.map(Integer.valueOf): _*))
-            .join(ids, Seq("id"), "left_anti")
-            .transform(clusteredFor(_, "cid_band", col("cid"), col("id")))))
-      val removed = removedT()
-      swapCommit("codes", "cid_band", touched.toIndexedSeq, tmp)
-      foldToken((0L, BigInt(0), BigInt(0)), removed)
-    } else foldToken((0L, BigInt(0), BigInt(0)), removedT())
-  }
+                 meta: => String): Unit =
+    writeIndex(meta, Codes -> codes, Cells -> cells, Codebooks -> codebooks)
+  def upsert(codes: DataFrame): Unit = upsert(Seq(Codes -> codes), None)
+  def append(codes: DataFrame): Unit = append(Codes -> codes)
 }

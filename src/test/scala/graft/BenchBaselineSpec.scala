@@ -97,6 +97,15 @@ class BenchBaselineSpec extends AnyFunSuite {
       .contains(""""cpus":"*""""))
   }
 
+  test("summaryLine escapes sfDir and a non-numeric cpus into valid JSON") {
+    val sfDir = "/data/sf \"q\" back\\slash\ttab"
+    val line = Bench.summaryLine("2.0000", 4, sfDir, "4\"\\", Some(4), 0, 0)
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(tree.get("sf").asText == sfDir)
+    assert(tree.get("cpus").asText == "4\"\\")
+    assert(tree.get("n").asInt == 4 && tree.get("baseline_matched").asInt == 4)
+  }
+
   test("isRegression pins the flag formula: >=2x AND >=0.5s absolute") {
     assert(Bench.isRegression(t = 1.2, base = 0.5)) // 2.4x and +0.7s
     assert(!Bench.isRegression(t = 0.9, base = 0.5)) // 1.8x — ratio short

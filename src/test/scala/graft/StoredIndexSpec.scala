@@ -324,7 +324,7 @@ class StoredIndexSpec extends SparkSpec {
     }
     val before = idxA.readPostings().collect().toSet
     val filesBefore = files(rootA)
-    idxA.compactPostings()
+    idxA.compact()
     assert(idxA.readPostings().collect().toSet == before,
       "compaction must preserve the row set byte for byte")
     assert(files(rootA) <= filesBefore,
@@ -621,7 +621,7 @@ class StoredIndexSpec extends SparkSpec {
         (3L, 500L, s, (s % 6).toLong, if (s == 0) Some(99L) else None))
       .toDF("cid", "id", "s", "code", "fp")
     IndexStore.crashAt = (_ == "marker")
-    intercept[IndexStore.InjectedCrash] { idx.appendCodes(full) }
+    intercept[IndexStore.InjectedCrash] { idx.append(full) }
     IndexStore.crashAt = _ => false
     assert(idx.readCodes().where(col("id") === 500L).count() == 4,
       "roll-forward must land every subspace row of the batch")
@@ -645,14 +645,14 @@ class StoredIndexSpec extends SparkSpec {
     // a LIVE foreign lease refuses the op with an actionable error
     plant(System.currentTimeMillis() + 3600L * 1000)
     val e = intercept[IllegalStateException] {
-      idx.deletePostings(Seq(39L).toDF("id"))
+      idx.delete(Seq(39L).toDF("id"))
     }
     assert(e.getMessage.contains("another writer"), e.getMessage)
     assert(idx.readPostings().where(col("id") === 39L).count() == 1,
       "the refused op must not have touched the index")
     // an EXPIRED lease (maintainer died without releasing) is broken
     plant(System.currentTimeMillis() - 1)
-    idx.deletePostings(Seq(39L).toDF("id"))
+    idx.delete(Seq(39L).toDF("id"))
     assert(idx.readPostings().where(col("id") === 39L).count() == 0)
     assert(!fs.exists(lease), "the op must release its own lease")
   }
@@ -731,5 +731,101 @@ class StoredIndexSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(s"$root/postings.old-sim")))
     assert(idx.readPostings().count() == n,
       "read after a crashed swap must restore the pre-swap postings")
+  }
+
+  test("maintenance job counts never rise: each op pinned per store") {
+    // Spark jobs each maintenance op launches on a small fixture, counted
+    // by a listener keyed on a local property (Overlap threads inherit it
+    // from the calling thread). A flush job's start event proves every
+    // earlier event was delivered: the listener bus is ordered.
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.sources.{PqIndex, TextIndex}
+    val sc = spark.sparkContext
+    val key = "graft.spec.op"
+    val jobs = new ConcurrentHashMap[String, Integer]()
+    @volatile var flushed = new CountDownLatch(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach { op =>
+            if (op == "flush") flushed.countDown()
+            else jobs.merge(op, 1, (a, b) => a + b)
+          }
+    }
+    def counted(op: String)(body: => Unit): Unit = {
+      sc.setLocalProperty(key, op)
+      try body finally sc.setLocalProperty(key, null)
+      flushed = new CountDownLatch(1)
+      sc.setLocalProperty(key, "flush")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(key, null)
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus never drained")
+    }
+    val meta = "pin|n=0|sumid=0|chk=0|bands=16"
+    sc.addSparkListener(listener)
+    try {
+      val ivf = new VectorIndex(spark, tmpDir("vidx-jobs"))
+      def vecs(ids: Seq[Long]) = ids.map(i => (i % 5, i,
+          Seq(1.0 + i % 3, 0.5 * (i % 7)), 2.0)).toDF("cid", "id", "v", "nrm")
+      counted("ivf writeIndex")(ivf.writeIndex(
+        (0L until 5L).map(c => (c, Seq(c.toDouble, 1.0), 1.0))
+          .toDF("cid", "cv", "cn"),
+        vecs(0L until 40L), meta))
+      counted("ivf upsert")(ivf.upsert(vecs(Seq(3L, 100L))))
+      counted("ivf append")(ivf.append(vecs(Seq(200L, 201L))))
+      counted("ivf compact2")(ivf.compact(minFiles = 2))
+      counted("ivf compact")(ivf.compact())
+      counted("ivf delete")(ivf.delete(Seq(7L, 200L).toDF("id")))
+
+      val pq = new PqIndex(spark, tmpDir("pqidx-jobs"))
+      def codes(ids: Seq[Long]) = ids.flatMap(i => (0 until 4).map(s =>
+          (i % 5, i, s, (i + s) % 6, if (s == 0) Some(i * 31) else None)))
+        .toDF("cid", "id", "s", "code", "fp")
+      counted("pq writeIndex")(pq.writeIndex(
+        (0L until 5L).map(c => (c, Seq(c, 1L, 2L, 3L))).toDF("cid", "cv"),
+        (0 until 4).flatMap(s => (0L until 6L).map(c => (s, c, Seq(c))))
+          .toDF("s", "ccid", "csub"),
+        codes(0L until 40L), meta))
+      counted("pq upsert")(pq.upsert(codes(Seq(3L, 100L))))
+      counted("pq append")(pq.append(codes(Seq(200L, 201L))))
+      counted("pq compact2")(pq.compact(minFiles = 2))
+      counted("pq compact")(pq.compact())
+      counted("pq delete")(pq.delete(Seq(7L, 200L).toDF("id")))
+
+      val text = new TextIndex(spark, tmpDir("tidx-jobs"))
+      val terms = Seq("alpha", "beta", "gamma", "delta", "omega")
+      def posts(ids: Seq[Long]) = ids.flatMap(i => terms.indices
+          .filter(t => (i + t) % 2 == 0)
+          .map(t => (terms(t), i, 3L, 1L, 100L + t)))
+        .toDF("term", "id", "df", "tf", "w")
+      def norms(ids: Seq[Long]) = ids.map(i => (i, BigDecimal(i * 100), i * 7))
+        .toDF("id", "n2", "fp")
+      val base = 0L until 20L
+      counted("text writeIndex")(
+        text.writeIndex(posts(base), norms(base), meta))
+      counted("text upsert")(text.upsert(posts(Seq(3L, 100L)),
+        norms(Seq(3L, 100L)), evictIds = Some(Seq(4L).toDF("id"))))
+      counted("text append")(
+        text.append(posts(Seq(200L, 201L)), norms(Seq(200L, 201L))))
+      counted("text compact2")(text.compact(minFiles = 2))
+      counted("text compact")(text.compact())
+      counted("text delete")(text.delete(Seq(7L, 200L).toDF("id")))
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val got = jobs.asScala.map { case (k, v) => k -> v.intValue }.toMap
+    // the counts these ops launched before the stores shared one
+    // lifecycle implementation: any rise is a regression
+    val pinned = Map(
+      "ivf writeIndex" -> 4, "ivf upsert" -> 18, "ivf append" -> 6,
+      "ivf compact2" -> 3, "ivf compact" -> 3, "ivf delete" -> 12,
+      "pq writeIndex" -> 5, "pq upsert" -> 18, "pq append" -> 6,
+      "pq compact2" -> 3, "pq compact" -> 3, "pq delete" -> 12,
+      "text writeIndex" -> 6, "text upsert" -> 22, "text append" -> 10,
+      "text compact2" -> 6, "text compact" -> 6, "text delete" -> 18)
+    assert(got.keySet == pinned.keySet, s"unpinned or silent ops: $got")
+    pinned.foreach { case (op, n) =>
+      assert(got(op) <= n, s"$op launched ${got(op)} jobs, pinned at $n")
+    }
   }
 }

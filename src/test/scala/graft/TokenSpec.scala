@@ -68,7 +68,7 @@ class TokenSpec extends SparkSpec {
     assert(idx.storedToken().contains(scan(cov4)),
       "delete must fold forgotten terms out")
     // compaction moves no rows — token untouched
-    idx.compactPostings()
+    idx.compact()
     assert(idx.storedToken().contains(scan(cov4)))
   }
 
@@ -79,7 +79,7 @@ class TokenSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val idx = new TextIndex(spark, tmpDir("tok-text"))
     def scan(d: DataFrame) =
-      TfIdf.textScanToken(d, "doc_id", "text", 10000L, idx.nBuckets)
+      TfIdf.textScanToken(d, "doc_id", "text", 10000L, idx.nBands)
     TfIdf.sparseBuildStored(docs, "doc_id", "text", idx).collect()
     assert(idx.storedToken().contains(scan(docs)))
 
@@ -197,7 +197,7 @@ class TokenSpec extends SparkSpec {
     assert(reb == scratch,
       s"stats refresh must converge to build-from-scratch: $reb vs $scratch")
     val mergedTok =
-      TfIdf.textScanToken(merged, "doc_id", "text", 10000L, idx.nBuckets)
+      TfIdf.textScanToken(merged, "doc_id", "text", 10000L, idx.nBands)
     assert(idx.isFresh(mergedTok), "rebuilt index must be fresh for merged")
     assert(idx.storedToken().contains(mergedTok))
   }
